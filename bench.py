@@ -109,39 +109,25 @@ def main() -> None:
 
     times = _bench(HEADLINE)
 
-    # headline seen filter: CUCKOO (VERDICT r2 #8 — consistently the
-    # faster membership path in both the driver's r2 run and local
-    # snapshots, and deletion-capable, which recrawl/expiry needs; FPR
-    # and occupancy at the 10^10 design point are documented in
-    # voz_spark/config.py). Best of 3: this box sees large co-tenant
-    # wall-clock swings (BENCH/BASELINE.md notes; one observed window
-    # halved a single run) — the later runs are also codegen-warm.
-    import dataclasses
-
-    from voz_spark.config import DEFAULT
-
-    ckcfg = dataclasses.replace(DEFAULT, seen_filter="cuckoo")
+    # best of 3: this box sees large co-tenant wall-clock swings
+    # (BENCH/BASELINE.md notes; one observed window halved a single
+    # run) — the later runs are also codegen-warm
     frontier = None
     for _ in range(3):
-        r = bench_frontier_schedule(spark, n_urls=n_frontier, cfg=ckcfg)
+        r = bench_frontier_schedule(spark, n_urls=n_frontier)
         if frontier is None or r["urls_per_sec"] > frontier["urls_per_sec"]:
             frontier = r
 
     extra = _bench(EXTRA)
 
-    # secondary: the same pipeline through the bloom seen filter
-    # (BASELINE names "bloom/cuckoo"; both strategies stay first-class
-    # and engine-level schedule parity is test-pinned)
-    frontier_bl = None
-    for _ in range(2):
-        r = bench_frontier_schedule(spark, n_urls=n_frontier)
-        if frontier_bl is None or r["urls_per_sec"] > frontier_bl["urls_per_sec"]:
-            frontier_bl = r
-
     # the bucketed seen-store variant — the 10^10 design point (seen
     # side re-read with zero Exchange from the bucket-sorted index;
     # VERDICT r3 item 7 asked for a published throughput row)
-    bkcfg = dataclasses.replace(DEFAULT, seen_filter="cuckoo", seen_store="bucketed")
+    import dataclasses
+
+    from voz_spark.config import DEFAULT
+
+    bkcfg = dataclasses.replace(DEFAULT, seen_store="bucketed")
     frontier_bk = None
     for _ in range(2):
         r = bench_frontier_schedule(spark, n_urls=n_frontier, cfg=bkcfg)
@@ -160,7 +146,6 @@ def main() -> None:
                 "extra_queries": extra,
                 "sf": sf_dir,
                 "frontier": frontier,
-                "frontier_bloom": frontier_bl,
                 "frontier_bucketed": frontier_bk,
                 "frontier_urls_per_sec": frontier["urls_per_sec"],
             }

@@ -22,7 +22,7 @@ TWO ceilings, because the box has two independent shared resources:
   coordination. The right bound for byte-moving stages — shuffle
   write/read, cache materialization, columnar (de)compression — whose
   per-task CPU time inflates when N procs share one memory bus. The
-  round-3 stage profile (bench/stage_profile.py) showed exactly this:
+  round-3 stage profile (BENCH/stage_profile_r4.json) showed exactly this:
   every schedule-pipeline stage's wall shrinks only ~2x at 4x cores
   while its summed task CPU inflates 1.4-2.6x; the CPU burn (1.15x
   inflation) cannot explain that, the memory burn does.

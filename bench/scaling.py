@@ -255,8 +255,8 @@ def report_from_files(sched_path: str, rnd_path: str) -> None:
 def _roofline_section(sched: dict, rnd: dict) -> str:
     """DRAM-roofline arithmetic for the scheduling pipeline (VERDICT
     r3 item 2, done-state (b)): bytes moved per URL through the two
-    frontier-sized shuffles (measured by bench/stage_profile.py into
-    BENCH/stage_profile_r4.json) against the SAME-WINDOW measured DRAM
+    frontier-sized shuffles (measured by a Spark event-log stage
+    profile into BENCH/stage_profile_r4.json) against the SAME-WINDOW measured DRAM
     bandwidth at N and 4N. Section renders only when the sidecar
     exists, so regenerating this report never silently drops it."""
     side = os.path.join(REPO, "BENCH", "stage_profile_r4.json")
@@ -477,7 +477,7 @@ threshold algorithm.
 
 Raw efficiency **{sched["best"]["efficiency"]:.3f}** (median of all pairs {sched["median_efficiency"]:.3f}) · bracketing CPU ceiling {sched["best"]["machine_ceiling"]:.3f} / memory ceiling {sched["best"]["mem_ceiling"]:.3f} · CPU-normalized **{sched["best"]["normalized_efficiency"]:.3f}** (median {sched["median_normalized_efficiency"]:.3f}; uncapped — >1.0 would flag a calibration-window mismatch)
 
-### Stage-level scaling profile (bench/stage_profile.py, round 3)
+### Stage-level scaling profile (Spark event log, round 3)
 
 Per-stage event-log profile of this exact job at ({pn}, {p4n}), 16M
 URLs: EVERY stage's wall shrinks from N to 4N — there is no serial

@@ -35,7 +35,7 @@ from voz_spark.config import DEFAULT
 cpus = int(os.environ["VOZ_BENCH_CPUS"])
 n = int(os.environ["VOZ_BENCH_URLS"])
 store = os.environ["VOZ_BENCH_STORE"]
-cfg = dataclasses.replace(DEFAULT, seen_filter="cuckoo", seen_store=store)
+cfg = dataclasses.replace(DEFAULT, seen_store=store)
 spark = get_spark("voz_crossover", master="local[" + str(cpus) + "]",
                   shuffle_partitions=cpus,
                   extra_conf={{"spark.sql.adaptive.enabled": "false",

@@ -33,23 +33,10 @@ def main() -> None:
     ap.add_argument("--thread-limit", type=int, default=None)
     ap.add_argument("--include-sticky", action="store_true")
     ap.add_argument("--master", default=None)
-    ap.add_argument(
-        "--seen-filter",
-        choices=["bloom", "cuckoo"],
-        default="bloom",
-        help="URL-seen filter strategy: bloom (insert-only bitmap shards)"
-        " or cuckoo (deletion-capable fingerprint tables — enables"
-        " in-place recrawl/expiry via CrawlEngine.reopen)",
-    )
     args = ap.parse_args()
 
-    import dataclasses
-
-    from voz_spark.config import DEFAULT
     from voz_spark.rounds import CrawlEngine
     from voz_spark.session import get_spark
-
-    cfg = dataclasses.replace(DEFAULT, seen_filter=args.seen_filter)
 
     spark = get_spark("voz_crawl_rounds", master=args.master)
     eng = CrawlEngine(
@@ -59,7 +46,6 @@ def main() -> None:
         n_images=args.images,
         thread_limit=args.thread_limit,
         include_sticky=args.include_sticky,
-        cfg=cfg,
     )
     t0 = time.time()
     stats = eng.run(max_rounds=args.rounds, verbose=True)

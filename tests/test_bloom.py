@@ -178,10 +178,12 @@ def test_bloom_param_change_rebuilds_state(spark):
     would yield false 'definitely unseen' and silent re-crawls): the
     engine detects the manifest-recorded parameter mismatch, rebuilds
     the bloom from the authoritative seen table, and the finished
-    crawl still matches the sequential simulator exactly."""
+    crawl still matches the sequential simulator exactly. One more
+    input on the same crawl, before the parameter change: `seen`
+    present with an empty `seen_bloom` (how a crawl run under the
+    removed cuckoo filter resumes) must also rebuild from `seen`, not
+    take the lit(False) empty-state path."""
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from voz_spark.config import CrawlConfig
     from voz_spark.oracle_sim import simulate
@@ -193,21 +195,32 @@ def test_bloom_param_change_rebuilds_state(spark):
     eng.run_round()
     eng.run_round()
 
+    def assert_rebuilt_from_seen(eng2, cfg2):
+        # the rebuilt state has NO false negatives over the committed seen set
+        blobs = {r.shard_id: r for r in eng2._validated_bloom_table().collect()}
+        assert all(r.nbits == cfg2.bloom_bits_per_shard for r in blobs.values())
+        seen_hashes = [r.url_hash for r in eng2.seen().collect()]
+        assert seen_hashes
+        for h in seen_hashes:
+            sid = int(B.shard_of(np.array([h], dtype=np.int64).astype(np.uint64), cfg2.n_bloom_shards)[0])
+            row = blobs[sid]
+            bits = np.frombuffer(row.bits, dtype=np.uint8)
+            assert B.maybe_contains(
+                bits, np.array([h], dtype=np.int64).astype(np.uint64), row.nbits, row.k
+            )[0]
+
+    # the manifest a cuckoo-filter crawl committed: the same layout
+    # meta, seen_filter="cuckoo", and no seen_bloom files
+    meta = {**eng.cat.manifest()["meta"], "seen_filter": "cuckoo"}
+    eng.cat.commit(replaces={"seen_bloom": []}, meta=meta)
+    eng1 = CrawlEngine(spark, wd, n_seeds=5, n_images=150)
+    assert_rebuilt_from_seen(eng1, eng1.cfg)
+    eng1.run_round()
+    assert eng1.cat.manifest()["tables"].get("seen_bloom")
+
     cfg2 = CrawlConfig(n_bloom_shards=8, bloom_bits_per_shard=1 << 16)
     eng2 = CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=cfg2)
-
-    # the rebuilt state has NO false negatives over the committed seen set
-    blobs = {r.shard_id: r for r in eng2._validated_bloom_table().collect()}
-    assert all(r.nbits == cfg2.bloom_bits_per_shard for r in blobs.values())
-    seen_hashes = [r.url_hash for r in eng2.seen().collect()]
-    assert seen_hashes
-    for h in seen_hashes:
-        sid = int(B.shard_of(np.array([h], dtype=np.int64).astype(np.uint64), cfg2.n_bloom_shards)[0])
-        row = blobs[sid]
-        bits = np.frombuffer(row.bits, dtype=np.uint8)
-        assert B.maybe_contains(
-            bits, np.array([h], dtype=np.int64).astype(np.uint64), row.nbits, row.k
-        )[0]
+    assert_rebuilt_from_seen(eng2, cfg2)
 
     eng2.run()
     sim = simulate(n_seeds=5, n_images=150)
@@ -216,3 +229,37 @@ def test_bloom_param_change_rebuilds_state(spark):
     # new manifests record the new layout
     meta = eng2.cat.manifest()["meta"]
     assert meta["bloom_n_shards"] == cfg2.n_bloom_shards
+
+
+def test_engine_reopen_recrawls_urls(spark):
+    """Recrawl story end-to-end: reopened URLs leave `seen` and the
+    bloom (rebuilt from the remaining seen rows), re-enter the
+    frontier with their original priority fields, and the next run
+    fetches them AGAIN (one extra results row each); every other URL
+    stays crawled-once."""
+    import tempfile
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from voz_spark.rounds import CrawlEngine
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="reopen-"), n_seeds=5, n_images=150)
+    eng.run()
+    threads = sorted(
+        {r.canon_url for r in eng.results().where(F.col("kind") == "thread").collect()}
+    )
+    targets = threads[:3]
+    seen_before = {r.canon_url for r in eng.seen().collect()}
+    st = eng.reopen(spark.createDataFrame([(u,) for u in targets], "canon_url string"))
+    assert st["n_reopened"] == len(targets)
+    seen_mid = {r.canon_url for r in eng.seen().collect()}
+    assert seen_mid == seen_before - set(targets)
+
+    eng.run()  # fetches exactly the reopened URLs, then drains
+    assert {r.canon_url for r in eng.seen().collect()} == seen_before
+    counts = Counter(r.canon_url for r in eng.results().collect())
+    for u in targets:
+        assert counts[u] == 2, (u, counts[u])
+    untouched = [u for u in threads if u not in targets]
+    assert all(counts[u] == 1 for u in untouched)

@@ -269,3 +269,31 @@ def test_q268_greedy_coverage_replay(spark, sf_dir):
     # greedy marginal gains are non-increasing (submodularity)
     gains = [w[2] for w in want]
     assert gains == sorted(gains, reverse=True)
+
+
+def test_q268_stops_when_coverage_completes_before_k(spark, tmp_path):
+    """Degenerate fixture: two documents hold every trigram, so
+    coverage completes in two rounds, before K. Spark must return the
+    two rows the DuckDB oracle returns, not fail on an empty argmax."""
+    from voz_spark.extras_r5 import _Q268_K
+    from voz_spark.oracle_compare import compare
+    from voz_spark.registry import all_oracles
+
+    texts = ["a b c d e", "a b c", "c d e", "x y z w"]
+    pd.DataFrame(
+        {
+            "doc_id": range(1, len(texts) + 1),
+            "text": texts,
+            "lang": "en",
+            "source": "web",
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    sf = str(tmp_path)
+    df = all_queries()["q268_greedy_coverage_selection"](spark, sf)
+    rows = [(r.round, r.doc_id, r.n_new_shingles, r.covered_total) for r in df.collect()]
+    assert _Q268_K > 2
+    assert rows == [(1, 1, 3, 3), (2, 4, 2, 5)]
+    ok, msg = compare(df, all_oracles()["q268_greedy_coverage_selection"], sf)
+    release_caches(spark)
+    assert ok, msg

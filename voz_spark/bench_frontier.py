@@ -1,12 +1,12 @@
 """Frontier scheduling throughput benchmark (BASELINE.json metric:
 "frontier URLs scheduled+deduped / second").
 
-Measures the per-round scheduling pipeline — canonicalize → hash →
-in-batch dedup → bloom prefilter → exact anti-join vs a pre-seeded
-seen set → robots → salted per-host priority scheduling — on a
-synthetic frontier of N URLs, ~25% in-batch duplicates, 50% of the
-distinct space already seen (so the dedup path does real work), one
-dominant host (~70%) for skew realism.
+Times the engine's own round front half (frontier.dedup_and_schedule:
+canonicalize → hash → in-batch dedup → bloom prefilter → exact
+anti-join vs a pre-seeded seen set → robots → salted per-host priority
+scheduling) on a synthetic frontier of N URLs, ~25% in-batch
+duplicates, 50% of the distinct space already seen (so the dedup path
+does real work), one dominant host (~70%) for skew realism.
 
 The 10^10 design point is extrapolated from this per-round pipeline
 (BASELINE.md protocol): state is partition-sharded, so rounds at
@@ -16,22 +16,17 @@ bounded by the bloom prefilter's pass-through rate.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from voz_spark import bloom as B
+from voz_spark import schemas
 from voz_spark.config import DEFAULT, CrawlConfig
-from voz_spark.frontier import (
-    _bloom_split,
-    _canonicalize,
-    _dedup_against_seen,
-    _dedup_in_batch,
-    _host_path,
-    _robots_flag,
-    _schedule,
-)
+from voz_spark.frontier import dedup_and_schedule
+from voz_spark.rounds import CrawlEngine
 from voz_spark.synth import DOMINANT_IMG_HOST, MINOR_IMG_HOSTS, robots_rules
 
 
@@ -55,70 +50,11 @@ def _url_expr() -> F.Column:
     )
 
 
-def _build_membership(spark: SparkSession, seen, cfg: CrawlConfig):
-    """Build seen-filter state (bloom or cuckoo) from `seen` with the
-    engine's distributed build paths and return the membership
-    splitter. Shared by BOTH benchmark jobs so the full round pays the
-    same real prefilter + anti-join the scheduling job does; the build
-    itself stays OUTSIDE the timed window — the metric is per-round
-    membership + scheduling cost, not one-time state construction."""
-    import pandas as pd
-
-    nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
-
-    if cfg.seen_filter == "cuckoo":
-        from voz_spark import cuckoo_state as CS
-
-        cstate = CS.build_from_seen(seen.select("url_hash"), n_shards)
-        cblobs = CS.blobs_from(cstate)
-
-        def membership(df):
-            return CS.split_broadcast(spark, df, cblobs, n_shards)
-
-    else:
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            sid = int(pdf["shard_id"].iloc[0])
-            bits = B.empty_shard(nbits)
-            B.add_hashes(bits, pdf["url_hash"].to_numpy().astype(np.uint64), nbits, k)
-            return pd.DataFrame(
-                [{"shard_id": sid, "nbits": nbits, "k": k, "bits": bits.tobytes()}]
-            )
-
-        from voz_spark import schemas
-
-        blob_rows = (
-            seen.select(
-                F.pmod("url_hash", F.lit(n_shards)).cast("int").alias("shard_id"),
-                "url_hash",
-            )
-            .groupBy("shard_id")
-            .applyInPandas(build, schemas.SEEN_BLOOM)
-            .collect()
-        )
-        shard_blobs = {int(r.shard_id): bytes(r.bits) for r in blob_rows}
-
-        def membership(df):
-            return _bloom_split(spark, df, shard_blobs, cfg)
-
-    return membership
-
-
-def bench_frontier_schedule(
-    spark: SparkSession,
-    n_urls: int = 2_000_000,
-    cfg: CrawlConfig = DEFAULT,
-    partitions: int | None = None,
-    persist_cand: bool = True,
-    persist_stage1: bool = True,
-) -> dict:
-    """One timed scheduling round over n_urls candidates."""
-    sc = spark.sparkContext
-    parts = partitions or sc.defaultParallelism * 2
+def _synthetic_inputs(spark: SparkSession, n_urls: int, parts: int) -> tuple[DataFrame, DataFrame]:
+    """The candidate frontier (n_urls rows over 0.75·n_urls distinct
+    URLs) and a persisted, materialized seen set holding half of the
+    distinct URLs."""
     distinct_space = int(n_urls * 0.75)  # ~25% in-batch duplicate URLs
-
     frontier = (
         spark.range(n_urls, numPartitions=parts)
         .select(
@@ -134,20 +70,42 @@ def bench_frontier_schedule(
             F.lit(0).alias("attempt"),
         )
     )
-
-    # pre-seeded seen set: 50% of the distinct space
     seen = (
         spark.range(distinct_space // 2, numPartitions=parts)
-        .select(F.col("id").alias("uid"), F.col("id"))
+        .select(F.col("id").alias("uid"))
         .select(_url_expr().alias("canon_url"))
         .select(F.xxhash64("canon_url").alias("url_hash"), "canon_url")
         .persist()
     )
-    n_seen = seen.count()
+    seen.count()
+    return frontier, seen
 
-    # seen-filter state (engine build paths, distributed), outside the
-    # timed window — see _build_membership
-    membership = _build_membership(spark, seen, cfg)
+
+def _seen_blobs(spark: SparkSession, seen: DataFrame, cfg: CrawlConfig) -> dict[int, bytes]:
+    """Bloom shard blobs over `seen`, built by the engine's own
+    distributed build path. Runs outside the timed window: the metric
+    is per-round membership + scheduling cost, not one-time state
+    construction."""
+    wd = tempfile.mkdtemp(prefix="voz_bench_engine_")
+    try:
+        eng = CrawlEngine(spark, wd, cfg=cfg)
+        empty = spark.createDataFrame([], schemas.SEEN_BLOOM)
+        return eng._bloom_blobs_from(eng._updated_bloom_cogroup(seen.select("url_hash"), empty))
+    finally:
+        shutil.rmtree(wd, ignore_errors=True)
+
+
+def bench_frontier_schedule(
+    spark: SparkSession,
+    n_urls: int = 2_000_000,
+    cfg: CrawlConfig = DEFAULT,
+    partitions: int | None = None,
+) -> dict:
+    """One timed scheduling round over n_urls candidates."""
+    sc = spark.sparkContext
+    parts = partitions or sc.defaultParallelism * 2
+    frontier, seen = _synthetic_inputs(spark, n_urls, parts)
+    blobs = _seen_blobs(spark, seen, cfg)
 
     # seen side of the exact anti-join: cfg.seen_store="bucketed" is
     # the 10^10 design point — the pre-seeded seen set is materialized
@@ -159,8 +117,6 @@ def bench_frontier_schedule(
     # real crawl already has on disk).
     seen_anti = seen
     if cfg.seen_store == "bucketed":
-        import tempfile
-
         bdir = tempfile.mkdtemp(prefix="voz_bench_seen_bk_")
         tbl = "voz_bench_seen_bucketed"
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -183,35 +139,24 @@ def bench_frontier_schedule(
     budgets = {h: budget for h in [DOMINANT_IMG_HOST, *MINOR_IMG_HOSTS]}
 
     t0 = time.time()
-    cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
-    cand = membership(cand)
-    _tmp = []
-    if persist_cand:
-        cand = cand.persist()
-        _tmp.append(cand)
-    new = _dedup_against_seen(cand, seen_anti)
-    new = _robots_flag(new, robots_rules())
-    # mirror run_round_pipeline: path/robots_blocked end here, so the
-    # window exchange and stage-1 cache never carry them
-    allowed = new.where(~F.col("robots_blocked")).drop("robots_blocked", "path")
-    sched = _schedule(allowed, budgets, cfg.default_host_budget, cfg.n_salts, _tmp,
-                      do_persist=persist_stage1)
+    persisted: list[DataFrame] = []
+    _, sched = dedup_and_schedule(
+        spark, frontier, seen_anti, blobs, robots_rules(), budgets, cfg, persisted
+    )
     n_scheduled = sched.where(F.col("scheduled")).count()
     wall = time.time() - t0
-    for df_ in _tmp:
+    for df_ in persisted:
         df_.unpersist()
 
+    n_seen = seen.count()
     seen.unpersist()
     if cfg.seen_store == "bucketed":
-        import shutil
-
         spark.sql("DROP TABLE IF EXISTS voz_bench_seen_bucketed")
         shutil.rmtree(bdir, ignore_errors=True)
     return {
         "n_urls": n_urls,
         "n_seen_preloaded": n_seen,
         "n_scheduled": n_scheduled,
-        "seen_filter": cfg.seen_filter,
         "seen_store": cfg.seen_store,
         "wall_sec": round(wall, 3),
         "urls_per_sec": round(n_urls / wall, 1),
@@ -244,31 +189,8 @@ def bench_full_round(
 
     sc = spark.sparkContext
     parts = partitions or sc.defaultParallelism * 2
-    distinct_space = int(n_urls * 0.75)
-
-    frontier = (
-        spark.range(n_urls, numPartitions=parts)
-        .select(
-            F.pmod(F.xxhash64(F.col("id")), F.lit(distinct_space)).alias("uid"),
-            F.col("id"),
-        )
-        .select(
-            _url_expr().alias("url"),
-            F.lit(None).cast("string").alias("base_url"),
-            (F.col("id") % 1000).cast("int").alias("seed_rank"),
-            (F.col("id") % 11).cast("int").alias("page_no"),
-            (F.col("id") % 3).cast("int").alias("post_no"),
-            F.lit(0).alias("attempt"),
-        )
-    )
-    seen = (
-        spark.range(distinct_space // 2, numPartitions=parts)
-        .select(F.col("id").alias("uid"), F.col("id"))
-        .select(_url_expr().alias("canon_url"))
-        .select(F.xxhash64("canon_url").alias("url_hash"), "canon_url")
-        .persist()
-    )
-    seen.count()
+    frontier, seen = _synthetic_inputs(spark, n_urls, parts)
+    blobs = _seen_blobs(spark, seen, cfg)
     budgets = {h: budget for h in [DOMINANT_IMG_HOST, *MINOR_IMG_HOSTS]}
 
     def fetch_validate(batches):
@@ -296,23 +218,11 @@ def bench_full_round(
                     psnrs.append(None)
             yield pd.DataFrame({"status": statuses, "psnr_db": psnrs})
 
-    # real seen-filter state from the preloaded seen set (previously the
-    # round job passed EMPTY bloom state, so maybe_seen was a constant
-    # False and the 37%-seen preload never exercised the prefilter or
-    # the anti-join — the round benchmark now pays the same membership
-    # cost per candidate that the scheduling benchmark does)
-    membership = _build_membership(spark, seen, cfg)
-
     t0 = time.time()
-    cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
-    cand = membership(cand).persist()
-    _tmp = [cand]
-    new = _dedup_against_seen(cand, seen)
-    new = _robots_flag(new, robots_rules())
-    # mirror run_round_pipeline: path/robots_blocked end here, so the
-    # window exchange and stage-1 cache never carry them
-    allowed = new.where(~F.col("robots_blocked")).drop("robots_blocked", "path")
-    sched = _schedule(allowed, budgets, cfg.default_host_budget, cfg.n_salts, _tmp)
+    persisted: list[DataFrame] = []
+    _, sched = dedup_and_schedule(
+        spark, frontier, seen, blobs, robots_rules(), budgets, cfg, persisted
+    )
     fetched = (
         sched.where(F.col("scheduled"))
         .select("canon_url")
@@ -321,7 +231,7 @@ def bench_full_round(
     )
     counts = {r["status"]: r["n"] for r in fetched.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()}
     wall = time.time() - t0
-    for df_ in _tmp:
+    for df_ in persisted:
         df_.unpersist()
     seen.unpersist()
     n_fetched = sum(counts.values())

@@ -381,7 +381,7 @@ FROM per_doc GROUP BY source ORDER BY source
 )
 def q264_rare_token_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source junk audit: docs whose out-of-top-K-vocab token
-    share exceeds 40% are rejected; vocab is the broadcast TakeOrdered
+    share exceeds 25% are rejected; vocab is the broadcast TakeOrdered
     top-K."""
     tok = T(spark, sf_dir, "documents").select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("token")
@@ -799,13 +799,18 @@ def q268_greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFram
         nov = tri if covered is None else tri.join(
             F.broadcast(covered), "g", "left_anti"
         )
-        win = (
+        best = (
             nov.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_new"))
             .orderBy(F.desc("n_new"), "doc_id")
             .limit(1)
-            .collect()[0]
+            .collect()
         )
+        if not best:
+            # every trigram is covered: no later round selects a
+            # document either, and the oracle returns fewer rows
+            break
+        win = best[0]
         win_tris = tri.where(F.col("doc_id") == win.doc_id).select("g")
         covered = (
             win_tris if covered is None else covered.unionByName(win_tris)

@@ -577,6 +577,45 @@ def _validate_images(joined: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return joined.mapInPandas(validate, _VALIDATE_SCHEMA)
 
 
+def dedup_and_schedule(
+    spark: SparkSession,
+    frontier: DataFrame,
+    seen: DataFrame,
+    shard_blobs: dict[int, bytes],
+    robots_rules: list[dict],
+    budgets: dict[str, int],
+    cfg: CrawlConfig,
+    persisted: list[DataFrame],
+    bloom_df: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The round's front half: canonicalize → in-batch dedup → bloom
+    prefilter → exact anti-join vs `seen` → robots flag → salted
+    per-host schedule. Shared by run_round_pipeline and the frontier
+    benchmarks (bench_frontier.py), so the benchmark times this code.
+
+    Returns ``(new, sched_all)``: `new` holds every never-seen
+    candidate with its `robots_blocked` flag; `sched_all` holds the
+    robots-allowed ones with the `scheduled` flag. Both are persisted;
+    every cached frame is appended to `persisted`. The stages are
+    called through this module's globals, so tracing can wrap them."""
+    cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
+    # persist before the membership fork: both the definitely-new branch
+    # and the anti-join branch read this, and without a persist each
+    # branch would re-run the canonicalization + dedup + membership UDF
+    cand = _bloom_split(spark, cand, shard_blobs, cfg, bloom_df=bloom_df).persist()
+    persisted.append(cand)
+    new = _robots_flag(_dedup_against_seen(cand, seen), robots_rules).persist()
+    persisted.append(new)
+    # `path` and the spent robots flag have no consumer past this
+    # point — dropping them here keeps ~25% of the string bytes out of
+    # the scheduling window exchange and the stage-1 cache
+    allowed = new.where(~F.col("robots_blocked")).drop("robots_blocked", "path")
+    sched_all = _schedule(allowed, budgets, cfg.default_host_budget, cfg.n_salts, persisted)
+    sched_all = sched_all.persist()
+    persisted.append(sched_all)
+    return new, sched_all
+
+
 def run_round_pipeline(
     spark: SparkSession,
     frontier: DataFrame,
@@ -589,48 +628,17 @@ def run_round_pipeline(
     round_id: int,
     img_space: int,
     bloom_df: DataFrame | None = None,
-    seen_split=None,
 ) -> RoundResult:
     """Execute one crawl round; returns the new state DataFrames
-    (nothing committed here — rounds.commit_round persists atomically).
-
-    ``seen_split`` overrides the membership prefilter: a callable
-    ``df -> df + maybe_seen`` (the cuckoo strategy plugs in here —
-    rounds.CrawlEngine builds it from cfg.seen_filter). Default is the
-    bloom dispatch. Any strategy keeps the same contract: no false
-    negatives; maybe_seen rows pass the exact anti-join backstop."""
+    (nothing committed here — rounds.CrawlEngine.run_round commits
+    them atomically)."""
     persisted: list[DataFrame] = []
-
-    cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
-    # persist before the membership fork: both the definitely-new branch
-    # and the anti-join branch read this, and without a persist each
-    # branch would re-run the canonicalization + dedup + membership UDF
-    if seen_split is None:
-        cand = _bloom_split(spark, cand, shard_blobs, cfg, bloom_df=bloom_df).persist()
-    else:
-        cand = seen_split(cand).persist()
-    persisted.append(cand)
-    new = _dedup_against_seen(cand, seen)
-    new = _robots_flag(new, robots_rules)
-    new = new.persist()
-    persisted.append(new)
-
+    new, sched_all = dedup_and_schedule(
+        spark, frontier, seen, shard_blobs, robots_rules, budgets, cfg, persisted, bloom_df
+    )
     n_candidates = frontier.count()
     n_deduped = n_new = new.count()
     blocked = _unpack_pri(new.where(F.col("robots_blocked")))
-    # `path` and the spent robots flag have no consumer past this
-    # point — dropping them here keeps ~25% of the string bytes out of
-    # the scheduling window exchange and the stage-1 cache
-    allowed = new.where(~F.col("robots_blocked")).drop("robots_blocked", "path")
-
-    sched_all = _schedule(
-        allowed,
-        budgets,
-        cfg.default_host_budget,
-        cfg.n_salts,
-        persisted,
-    ).persist()
-    persisted.append(sched_all)
     scheduled = sched_all.where(F.col("scheduled"))
     pending = sched_all.where(~F.col("scheduled"))
 

@@ -26,6 +26,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap sized from the host: in local mode this one heap
+    also holds the executors, so a fixed 32g is OOM-killed on a 15 GB
+    machine. 55% of MemTotal leaves room for the JVM's native memory
+    and the Python workers; capped at 32g. SPARK_GRAFT_DRIVER_MEM
+    overrides it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    cap_mb = 32 << 10
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, total_kb * 55 // 100 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "voz_spark",
     master: str | None = None,
@@ -71,7 +89,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # zstd shuffle/spill codec: at high parallelism this box (and a
